@@ -67,26 +67,12 @@ def scan_with_join_filter(
     stats/bloom/partition pruning per key; `info` reports
     {files_total, files_planned, n_keys} so callers (and the q91
     pruning proof) can assert the skip actually happened."""
-    import os
-
     keys = harvest_keys(dim, dim_col or fact_col, max_keys)
     where = [(fact_col, "in", keys)]
-    # Plan ONCE. When the snapshot carries a columnar manifest sidecar
-    # (≥ PARQUET_MANIFEST_MIN files), pruning runs as a Spark job —
-    # sorted-key range intersection + bloom probes per manifest batch on
-    # executors, so a 10⁶-file × 10⁵-key plan never loops on the
-    # driver. plan_files_distributed falls back to the driver loop for
-    # small snapshots; results are identical by construction (same
-    # per-entry `_file_survives`).
-    snap0 = fact.snapshot()
-    if os.path.exists(fact._parquet_manifest_path(snap0.version)):
-        snap, planned = fact.plan_files_distributed(
-            version=snap0.version, where=where
-        )
-    else:
-        snap, planned = fact.plan_files(
-            version=snap0.version, where=where
-        )
+    # Plan ONCE: sorted-key range intersection + bloom probes per
+    # manifest entry (`_file_survives`), O(log keys + keys-in-range)
+    # per file.
+    snap, planned = fact.plan_files(where=where)
     # Row-group refinement: surviving files whose manifest entries
     # carry per-row-group stats are narrowed to the groups the key set
     # can actually touch (the `in` op binary-searches each group's
@@ -123,7 +109,7 @@ def scan_with_join_filter(
             fact._read_files(snap, [f.path for f in planned]), where
         )
     return df, {
-        "files_total": len(snap0.files),
+        "files_total": len(snap.files),
         "files_planned": len(planned),
         "n_keys": len(keys),
         "rowgroups_total": rg_total,

@@ -59,9 +59,6 @@ DATA_DIR = "data"
 POINTER = "_current"
 REFS = "_refs.json"
 FILE_COL = "__file_path"  # hidden provenance column (scan(with_file_path=True))
-# snapshots with at least this many files also get a columnar
-# (parquet) manifest sidecar for Spark-distributed scan planning
-PARQUET_MANIFEST_MIN = 2000
 
 
 def _stat_value(v):
@@ -169,8 +166,7 @@ class _SortedKeys:
     [min, max] stats range with the key list by binary search —
     O(log keys + keys-in-range) per file instead of O(keys). At the
     runtime-filter ceiling (10⁵ keys × 10⁶ files) that's the difference
-    between ~10⁷ and ~10¹¹ plan-time ops. Picklable (plain lists), so
-    `plan_files_distributed` ships it to executors as-is."""
+    between ~10⁷ and ~10¹¹ plan-time ops."""
 
     __slots__ = ("keys", "svs", "skeys", "unsortable", "sortable")
 
@@ -294,8 +290,8 @@ def _file_survives(
     """The complete per-file pruning decision — column-stats skipping,
     bloom equality probes, and hidden-partition transform mapping under
     the file's OWN spec (Iceberg spec_id semantics). Pure function of
-    one manifest entry, which is what lets `plan_files_distributed`
-    evaluate it inside a Spark job for million-file snapshots."""
+    one manifest entry; `plan_files` applies it to every entry of the
+    snapshot's JSON manifest."""
     from .bloom import bloom_may_contain
     from .transforms import parse_spec
 
@@ -417,6 +413,20 @@ class Snapshot:
     @property
     def total_bytes(self) -> int:
         return sum(f.bytes for f in self.files)
+
+
+def _snapshot_from_dict(d: dict[str, Any]) -> Snapshot:
+    """Manifest JSON → Snapshot: the one decoder for both reads
+    (`LakeTable.snapshot`) and the snapshot a commit returns."""
+    return Snapshot(
+        version=d["version"],
+        timestamp_ms=d["timestamp_ms"],
+        operation=d["operation"],
+        files=[FileEntry.from_json(x) for x in d["files"]],
+        schema_json=d.get("schema_json", ""),
+        summary=d.get("summary", {}),
+        deletes=d.get("deletes", []),
+    )
 
 
 class LakeTable:
@@ -556,18 +566,12 @@ class LakeTable:
             version = self.current_version()
             if version is None:
                 raise FileNotFoundError("table has no snapshots")
+        return _snapshot_from_dict(self._read_manifest(version))
+
+    def _read_manifest(self, version: int) -> dict[str, Any]:
         p = os.path.join(self.root, MANIFEST_DIR, f"v{version:08d}.json")
         with open(p) as f:
-            d = json.load(f)
-        return Snapshot(
-            version=d["version"],
-            timestamp_ms=d["timestamp_ms"],
-            operation=d["operation"],
-            files=[FileEntry.from_json(x) for x in d["files"]],
-            schema_json=d.get("schema_json", ""),
-            summary=d.get("summary", {}),
-            deletes=d.get("deletes", []),
-        )
+            return json.load(f)
 
     def snapshots(self) -> list[Snapshot]:
         mdir = os.path.join(self.root, MANIFEST_DIR)
@@ -853,13 +857,16 @@ class LakeTable:
                 f"concurrent modification: expected base v{base}, found v{cur}"
             )
         version = 0 if cur is None else cur + 1
+        # the head manifest is read ONCE: it supplies both the inherited
+        # MOR deletes and the streaming watermarks carried forward
+        head = self._read_manifest(cur) if cur is not None else {}
         # merge-on-read delete entries: inherit unless the caller sets
         # them explicitly (delete_mor adds one; rollback restores the
         # target's). Auto-GC: an entry applying to NO live file (every
         # file's seq >= its seq — e.g. after a full compaction rewrote
         # everything) is dropped.
         if deletes is None:
-            deletes = self.snapshot(cur).deletes if cur is not None else []
+            deletes = head.get("deletes", [])
         deletes = [
             d for d in deletes if any(f.seq < d["seq"] for f in files)
         ]
@@ -869,12 +876,11 @@ class LakeTable:
         # only, never scan the history. Incoming summary values win
         # (that's the committing micro-batch advancing its own mark).
         summary = dict(summary or {})
-        if cur is not None:
-            prev_wm = self.snapshot(cur).summary.get("stream_watermarks")
-            if prev_wm:
-                merged = dict(prev_wm)
-                merged.update(summary.get("stream_watermarks", {}))
-                summary["stream_watermarks"] = merged
+        prev_wm = head.get("summary", {}).get("stream_watermarks")
+        if prev_wm:
+            merged = dict(prev_wm)
+            merged.update(summary.get("stream_watermarks", {}))
+            summary["stream_watermarks"] = merged
         snap = {
             "version": version,
             "timestamp_ms": int(time.time() * 1000),
@@ -892,24 +898,21 @@ class LakeTable:
         # loser-overwritten commit under a two-writer race). The
         # primitive is pluggable (committer.py): POSIX hard-link here,
         # conditional PUT / catalog CAS on object stores.
-        if not self.committer.cas_create(mpath, json.dumps(snap)):
+        payload = json.dumps(snap)
+        if not self.committer.cas_create(mpath, payload):
             raise CommitConflict(
                 f"concurrent modification: v{version} was committed by "
                 "another writer while this commit was being prepared"
             )
-        # manifest-as-a-table: large snapshots ALSO get a columnar
-        # manifest sidecar so planning can run as a Spark job
-        # (plan_files_distributed) instead of a driver loop — the
-        # Iceberg manifest-list posture for million-file tables.
-        if len(files) >= PARQUET_MANIFEST_MIN:
-            self._write_parquet_manifest(version, files)
         # pointer-hint swap — a crash before this line leaves the
         # commit durable (the manifest IS the commit point); readers
         # forward-walk past the stale hint and repair it
         self.committer.set_hint(
             os.path.join(self.root, POINTER), str(version)
         )
-        return self.snapshot(version)
+        # decoded from the committed bytes, not the `snap` dict (which
+        # shares mutable stats/partition dicts with the caller's files)
+        return _snapshot_from_dict(json.loads(payload))
 
     # ------------------------------------------------------------------
     # write paths
@@ -1437,115 +1440,6 @@ class LakeTable:
         ]
         return snap, files
 
-    # -- manifest-as-a-table (million-file snapshots) -------------------
-    def _parquet_manifest_path(self, version: int) -> str:
-        return os.path.join(
-            self.root, MANIFEST_DIR, f"v{version:08d}.files.parquet"
-        )
-
-    def _write_parquet_manifest(
-        self, version: int, files: list[FileEntry]
-    ) -> None:
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        tbl = pa.table(
-            {
-                "path": [f.path for f in files],
-                "rows": [f.rows for f in files],
-                "bytes": [f.bytes for f in files],
-                "partition": [json.dumps(f.partition) for f in files],
-                "stats": [json.dumps(f.stats) for f in files],
-                "spec": [
-                    None if f.spec is None else json.dumps(f.spec)
-                    for f in files
-                ],
-                "seq": [f.seq for f in files],
-                "rg_stats": [
-                    None if f.rg_stats is None else json.dumps(f.rg_stats)
-                    for f in files
-                ],
-            }
-        )
-        out = self._parquet_manifest_path(version)
-        pq.write_table(tbl, out + ".tmp")
-        os.replace(out + ".tmp", out)
-
-    def plan_files_distributed(
-        self,
-        version: int | None = None,
-        where: list[tuple[str, str, Any]] | None = None,
-    ) -> tuple[Snapshot, list[FileEntry]]:
-        """`plan_files` as a Spark job: the pruning decision
-        (`_file_survives` — stats + bloom + per-spec transforms) runs
-        over the columnar manifest sidecar with mapInPandas, so a
-        million-entry manifest never materializes as Python objects on
-        the driver — only the SURVIVING entries come back (the file
-        list Spark needs anyway). Falls back to the driver loop when
-        the snapshot is below the sidecar threshold. Results are
-        identical to `plan_files` by construction (same per-entry
-        function)."""
-        snap = self.snapshot(version)
-        pq_path = self._parquet_manifest_path(snap.version)
-        if not os.path.exists(pq_path):
-            return self.plan_files(version=version, where=where)
-
-        current_spec = self.partition_by
-        # normalized ONCE on the driver; ships to executors pickled so
-        # no task re-sorts the key set
-        preds = list(_normalize_where(where) or [])
-
-        def prune(batches):
-            import pandas as pd
-
-            for pdf in batches:
-                keep = []
-                has_rg = "rg_stats" in pdf.columns
-                for i in range(len(pdf)):
-                    e = FileEntry(
-                        path=pdf["path"].iat[i],
-                        rows=int(pdf["rows"].iat[i]),
-                        bytes=int(pdf["bytes"].iat[i]),
-                        partition=json.loads(pdf["partition"].iat[i]),
-                        stats=json.loads(pdf["stats"].iat[i]),
-                        spec=(
-                            None
-                            if pdf["spec"].iat[i] is None
-                            else json.loads(pdf["spec"].iat[i])
-                        ),
-                        seq=int(pdf["seq"].iat[i]),
-                        rg_stats=(
-                            json.loads(pdf["rg_stats"].iat[i])
-                            if has_rg and pdf["rg_stats"].iat[i] is not None
-                            else None
-                        ),
-                    )
-                    keep.append(_file_survives(e, preds, current_spec))
-                yield pdf[pd.Series(keep, index=pdf.index)]
-
-        mdf = self.spark.read.parquet(pq_path)
-        survivors = mdf.mapInPandas(prune, schema=mdf.schema).collect()
-        files = [
-            FileEntry(
-                path=r["path"],
-                rows=r["rows"],
-                bytes=r["bytes"],
-                partition=json.loads(r["partition"]),
-                stats=json.loads(r["stats"]),
-                spec=None if r["spec"] is None else json.loads(r["spec"]),
-                seq=r["seq"],
-                rg_stats=(
-                    json.loads(r["rg_stats"])
-                    if "rg_stats" in r.__fields__
-                    and r["rg_stats"] is not None
-                    else None
-                ),
-            )
-            for r in survivors
-        ]
-        files.sort(key=lambda e: e.path)
-        return snap, files
-
     def scan(
         self,
         version: int | None = None,
@@ -2045,9 +1939,6 @@ class LakeTable:
             os.remove(
                 os.path.join(self.root, MANIFEST_DIR, f"v{s.version:08d}.json")
             )
-            side = self._parquet_manifest_path(s.version)
-            if os.path.exists(side):
-                os.remove(side)
             removed_manifests += 1
         return {
             "expired_snapshots": removed_manifests,

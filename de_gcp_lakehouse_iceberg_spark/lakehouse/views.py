@@ -65,9 +65,6 @@ class Warehouse:
         with open(os.path.join(self.root, VIEWS_FILE), "w") as f:
             json.dump(views, f, indent=2)
 
-    def view_names(self) -> list[str]:
-        return sorted(self._views())
-
     def _register_bases(self) -> None:
         for t in self.table_names():
             try:

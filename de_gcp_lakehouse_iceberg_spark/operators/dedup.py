@@ -98,14 +98,6 @@ def _cached_signing(dk: DataFrame) -> DataFrame:
         return dk
 
 
-def clear_signing_cache() -> None:
-    """Unpersist and forget every cached signing result (test hook /
-    explicit release)."""
-    with _SIGNING_LOCK:
-        _SIGNING_STATS.clear()
-        while _SIGNING_CACHE:
-            _unpersist_quiet(_SIGNING_CACHE.pop()._jdf)
-
 # SimHash per-token key: char-level polynomial hash (base 31, Mersenne
 # modulus). Cross-engine deterministic — the DuckDB oracle re-derives it
 # from these constants (plans/dedup_queries.py).
@@ -1203,26 +1195,6 @@ def simhash_fast(text_col: Column | str, bits: int = SIMHASH_BITS) -> Column:
 
     c = F.col(text_col) if isinstance(text_col, str) else text_col
     return sig(c)
-
-
-def simhash_pairs(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Candidate near-dup pairs with identical SimHash — an equality
-    self-join on the signature (hash join, no fan-out)."""
-    sigs = docs.select(
-        F.col(id_col).alias("doc_id"), simhash(text_col).alias("sig")
-    )
-    a, b = sigs.alias("a"), sigs.alias("b")
-    return a.join(
-        b,
-        (F.col("a.sig") == F.col("b.sig"))
-        & (F.col("a.doc_id") < F.col("b.doc_id")),
-    ).select(
-        F.col("a.doc_id").alias("doc_a"),
-        F.col("b.doc_id").alias("doc_b"),
-        F.col("a.sig").alias("sig"),
-    )
 
 
 def minhash_signatures(

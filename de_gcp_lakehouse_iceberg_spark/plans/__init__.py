@@ -80,25 +80,9 @@ from . import iceberg_query  # noqa: F401  (registers q117)
 #   python scripts/regen_gate_window.py
 _CURRENT_ROUND = 15
 
-# Queries whose implementation (operator, gate fixture, or oracle) is
-# changing in THIS round and must re-gate regardless of row age:
-#   q81  — the generator now fans out the NARROW doc_id projection,
-#          and only above the measured rows floor (r13 VERDICT #2:
-#          the full-table spread was pure overhead at gate scale)
-#   q96  — the corpus-side spread now routes on the measured footer
-#          cardinality (light per-row work -> higher crossover)
-#   q103 — the per-process sorted-layout cache keys on the full
-#          normalized fixture path (r13 ADVICE, basename collision)
-#   q60/q73/q91 — fixture loads now go through append_clustered (one
-#          clustered commit instead of the sequential per-band loop)
-#   q112/q113 — TermStatsIndex._deltas: single tokenize pass + single
-#          shuffle (array_distinct + NULL-term sentinel row)
-#   q47/q63/q20 — changelog() delete fast path (predicate recorded in
-#          the commit summary; one filtered read replaces the
-#          two-sided exceptAll diff); q20's delete records the summary
-#   q108 — one per-key source-set aggregation replaces the
-#          distinct + dk⋈dk self-join (sketch/counts/intersections all
-#          derive from it); trigram signing vectorized
+# Queries whose implementation (operator, gate fixture, or oracle)
+# changed in _CURRENT_ROUND and must re-gate regardless of row age —
+# the list below is the record.
 _CHANGED_THIS_ROUND = [
     "q106_bpe_merges", "q110_bpe_segment_rollup",
     "q98_ivm_delta_rollup", "q102_ivm_distinct_kmv",
@@ -175,11 +159,6 @@ def _derived_gate_window():
         _CHANGED_THIS_ROUND,
         _CURRENT_ROUND,
     )
-
-
-def _print_gate_window():
-    for name in _derived_gate_window():
-        print(f'    "{name}",')
 
 
 def _reorder_for_gate() -> None:

@@ -83,15 +83,6 @@ def q44_corpus_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
 # pairs) — making the hash gate a live end-to-end proof that the scale
 # path loses nothing on this corpus.
 # --------------------------------------------------------------------------
-_Q44_FN = q44_corpus_clean
-
-
-def _q64_oracle() -> str:
-    from .queries import ORACLE_SQL
-
-    return ORACLE_SQL["q44_corpus_clean"]
-
-
 @register("q64_corpus_clean_lsh", oracle=None)
 def q64_corpus_clean_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")

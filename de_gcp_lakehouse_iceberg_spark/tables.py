@@ -219,10 +219,6 @@ def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(spark.read.parquet(f"{sf_dir}/events.parquet"))
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def spread(df: DataFrame, *keys: str, measured: int | None = None) -> DataFrame:
     """Raise a narrow scan's parallelism to the session's core count
     before a compute-heavy projection.

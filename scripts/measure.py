@@ -1,12 +1,12 @@
-"""Round-15 measurement harness: time individual queries in a
+"""Measurement harness: time individual queries in a
 bench-identical session (warm-up + table/shingle cache) and capture
 their `.explain("formatted")` plans.
 
 Usage:
-  python scripts/r15_measure.py time q108_source_overlap_matrix q112_... \
+  python scripts/measure.py time q108_source_overlap_matrix q112_... \
       [--runs 3] [--sf /root/testdata/sf0.1]
-  python scripts/r15_measure.py explain q108_source_overlap_matrix \
-      [--out plans/r15/q108_before.txt]
+  python scripts/measure.py explain q108_source_overlap_matrix \
+      [--out plans/q108_before.txt]
 
 `time` mirrors bench.py's methodology (collect(), min-of-N, same
 session shape) so numbers are comparable to the ledger; `explain`
@@ -25,13 +25,13 @@ def _bench_session(sf_dir: str):
     from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
     from de_gcp_lakehouse_iceberg_spark.session import get_spark
 
-    spark = get_spark("r15-measure")
+    spark = get_spark("measure")
     # bench-identical warm-up: JVM/codegen, Python worker pool, caches
     QUERIES["q01_global_count"](spark, sf_dir).collect()
     import pandas as pd  # noqa: F401
     from pyspark.sql.functions import col, pandas_udf
 
-    import scripts.r15_measure as _self  # noqa: F401 (module-scope UDF)
+    import scripts.measure as _self  # noqa: F401 (module-scope UDF)
 
     _warm = pandas_udf(_udf_identity, "long")
     spark.range(1_000_000).repartition(64).select(_warm(col("id"))).count()
@@ -62,7 +62,7 @@ def main() -> None:
     ap.add_argument("--sf", default="/root/testdata/sf0.1")
     ap.add_argument("--out", default=None)
     ap.add_argument("--suffix", default="plan",
-                    help="plans/r15/<qNN>_<suffix>.txt for explain mode")
+                    help="plans/<qNN>_<suffix>.txt for explain mode")
     args = ap.parse_args()
 
     from de_gcp_lakehouse_iceberg_spark.plans import QUERIES
@@ -76,7 +76,7 @@ def main() -> None:
                 df._jdf.queryExecution(), "formatted"
             )
             out = args.out or (
-                f"plans/r15/{name.split('_')[0]}_{args.suffix}.txt"
+                f"plans/{name.split('_')[0]}_{args.suffix}.txt"
             )
             with open(out, "w") as f:
                 f.write(plan)
@@ -84,7 +84,7 @@ def main() -> None:
         return
 
     for name in args.queries:
-        spark.sparkContext.setJobDescription(f"r15: {name}")
+        spark.sparkContext.setJobDescription(f"measure: {name}")
         best, first = None, None
         for i in range(args.runs):
             t0 = time.perf_counter()

@@ -718,3 +718,48 @@ def test_stale_hint_repaired_after_fallback_scan(spark, tmp_path):
     assert t.current_version() == head  # fallback scan found the head
     with open(pointer) as f:
         assert f.read().strip() == str(head)  # ...and repaired the hint
+
+
+def test_large_commit_writes_only_its_json_manifest(spark, tmp_path):
+    """A commit's file list lives in its per-version JSON manifest and
+    nowhere else, at any file count: 2,500 entries add exactly one
+    `v*.json` under _manifests/. The returned snapshot equals a fresh
+    read of that manifest and carries the head's stream watermarks."""
+    import os
+
+    from de_gcp_lakehouse_iceberg_spark.lakehouse.table import (
+        MANIFEST_DIR,
+        FileEntry,
+    )
+
+    t = LakeTable.create(spark, str(tmp_path / "big"))
+    base = t._commit_snapshot(
+        operation="stream",
+        files=[],
+        schema_json="",
+        base=t.current_version(),
+        summary={"stream_watermarks": {"q": 7}},
+    )
+    mdir = os.path.join(t.root, MANIFEST_DIR)
+    before = set(os.listdir(mdir))
+    files = [
+        FileEntry(
+            path=f"data/part-{i:05d}.parquet",
+            rows=10,
+            bytes=1000,
+            partition={"b": str(i % 4)},
+            stats={"k": [i * 10, i * 10 + 9]},
+            seq=base.version,
+        )
+        for i in range(2500)
+    ]
+    snap = t._commit_snapshot(
+        operation="append",
+        files=files,
+        schema_json="",
+        base=base.version,
+    )
+    assert set(os.listdir(mdir)) - before == {f"v{snap.version:08d}.json"}
+    assert snap == t.snapshot(snap.version)
+    assert len(snap.files) == 2500
+    assert snap.summary["stream_watermarks"] == {"q": 7}
